@@ -93,8 +93,8 @@ object CosineSimilarity {
   val FunctionName = "graft_cosine_similarity"
 
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName, exprs => CosineSimilarity(exprs(0), exprs(1)), "built-in")
+    RegisterOnce(spark, FunctionName)(
+      exprs => CosineSimilarity(exprs(0), exprs(1)))
 
   def cosine(a: Column, b: Column): Column = call_function(FunctionName, a, b)
 }

@@ -145,8 +145,7 @@ object GramHash60 {
   val FunctionName = "graft_gram_hash60"
 
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName,
+    RegisterOnce(spark, FunctionName)(
       exprs => {
         require(exprs.length == 2,
           s"$FunctionName expects (array<string>, k), got ${exprs.length} args")
@@ -155,8 +154,7 @@ object GramHash60 {
         require(kv != null && kv.isInstanceOf[Number],
           s"$FunctionName: k must be a non-null integer literal")
         GramHash60(exprs.head, kv.asInstanceOf[Number].intValue)
-      },
-      "built-in")
+      })
 
   /** Column entry point; caller must [[register]] first. */
   def hashes(tokens: Column, k: Int): Column =

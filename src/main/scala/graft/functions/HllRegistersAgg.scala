@@ -130,8 +130,7 @@ object HllRegistersAgg {
   val FunctionName = "graft_hll_registers_agg"
 
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName,
+    RegisterOnce(spark, FunctionName)(
       exprs => {
         require(exprs.length == 3,
           s"$FunctionName expects (value, p, salt), got ${exprs.length} args")
@@ -143,8 +142,7 @@ object HllRegistersAgg {
           s"$FunctionName: p must be a non-null integer literal")
         require(sv != null, s"$FunctionName: salt must be a non-null string literal")
         HllRegistersAgg(exprs.head, pv.asInstanceOf[Number].intValue, sv.toString)
-      },
-      "built-in")
+      })
 
   /** Column entry point; caller must [[register]] first. */
   def registersOf(value: Column, p: Int, salt: String = "hll-"): Column =

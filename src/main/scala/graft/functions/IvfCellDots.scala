@@ -113,8 +113,7 @@ object IvfCellDots {
   val FunctionName = "graft_ivf_cell_dots"
 
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName,
+    RegisterOnce(spark, FunctionName)(
       exprs => {
         require(exprs.length == 3,
           s"$FunctionName expects (array<float>, cells, dims), got ${exprs.length} args")
@@ -126,8 +125,7 @@ object IvfCellDots {
           v.asInstanceOf[Number].intValue
         }
         IvfCellDots(exprs.head, ints(0), ints(1))
-      },
-      "built-in")
+      })
 
   /** Column entry point; caller must [[register]] first. */
   def cellDots(vec: Column, cells: Int, dims: Int): Column =

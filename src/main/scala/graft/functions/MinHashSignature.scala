@@ -114,8 +114,7 @@ object MinHashSignature {
     * custom Expression in Spark 4.
     */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName,
+    RegisterOnce(spark, FunctionName)(
       exprs => {
         // numHashes shapes the expression itself (loop bound, output
         // length), so it must be plan-time constant: reject columns /
@@ -128,8 +127,7 @@ object MinHashSignature {
         require(n != null && n.isInstanceOf[Number],
           s"$FunctionName: numHashes must be a non-null integer literal")
         MinHashSignature(exprs(0), n.asInstanceOf[Number].intValue)
-      },
-      "built-in")
+      })
 
   /** Column-level entry point; caller must [[register]] first (done by
     * [[graft.text.TextDedup.minhashBands]]).

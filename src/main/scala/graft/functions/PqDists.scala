@@ -51,8 +51,7 @@ object PqCodebook {
   private[functions] def registerShaped(
       spark: SparkSession, name: String,
       make: (Expression, Int, Int, Int) => Expression): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name,
+    RegisterOnce(spark, name)(
       exprs => {
         require(exprs.length == 4,
           s"$name expects (array<float>, m, k, dims), got ${exprs.length} args")
@@ -64,8 +63,7 @@ object PqCodebook {
           v.asInstanceOf[Number].intValue
         }
         make(exprs.head, ints(0), ints(1), ints(2))
-      },
-      "built-in")
+      })
 
   private[functions] def checkFloatArray(
       name: String, dt: DataType): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =

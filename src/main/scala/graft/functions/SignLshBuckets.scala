@@ -138,8 +138,7 @@ object SignLshBuckets {
   val FunctionName = "graft_sign_lsh_buckets"
 
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName,
+    RegisterOnce(spark, FunctionName)(
       exprs => {
         require(exprs.length == 4,
           s"$FunctionName expects (array<float>, tables, planes, dims), got ${exprs.length} args")
@@ -151,8 +150,7 @@ object SignLshBuckets {
           v.asInstanceOf[Number].intValue
         }
         SignLshBuckets(exprs.head, ints(0), ints(1), ints(2))
-      },
-      "built-in")
+      })
 
   /** Column entry point; caller must [[register]] first. */
   def buckets(vec: Column, tables: Int, planes: Int, dims: Int): Column =

@@ -134,8 +134,7 @@ object WinnowMins {
   val FunctionName = "graft_winnow_mins"
 
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName,
+    RegisterOnce(spark, FunctionName)(
       exprs => {
         require(exprs.length == 2,
           s"$FunctionName expects (array<long>, w), got ${exprs.length} args")
@@ -144,8 +143,7 @@ object WinnowMins {
         require(wv != null && wv.isInstanceOf[Number],
           s"$FunctionName: w must be a non-null integer literal")
         WinnowMins(exprs.head, wv.asInstanceOf[Number].intValue)
-      },
-      "built-in")
+      })
 
   /** Column entry point; caller must [[register]] first. */
   def fingerprints(hashes: Column, w: Int): Column =

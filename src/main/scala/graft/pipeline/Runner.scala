@@ -19,7 +19,9 @@ import scala.util.control.NonFatal
   *  2. silver: latest-wins by event_id over bronze (payload and event_id
   *     break timestamp ties deterministically);
   *  3. gold: minute-bucketed sales fact, merged by bucket;
-  *  4. quality gate: the reference's dbt schema tests on the gold output.
+  *  4. quality gate: the reference's dbt schema tests, run ONCE per batch
+  *     on the merged gold candidate before it is published, in one Spark
+  *     action ([[graft.quality.Checks.keyedNotNull]]).
   *
   * [[runManaged]] adds the reference DAG's operational posture
   * (reference: analytics/airflow/dags/rt_pipeline.py:152-154 — retries,
@@ -36,7 +38,10 @@ object Runner {
 
   /** `gold` is read fresh from `goldPath`; NOTE a subsequent run() swaps
     * the directory under any still-lazy reader, so materialize (or
-    * re-read from `goldPath`) before rerunning.
+    * re-read from `goldPath`) before rerunning. `qualityFailures` is the
+    * gate's verdict on the candidate that was published — empty after a
+    * managed run (a failing gate vetoes the publish), possibly not after
+    * a report-only [[run]].
     */
   case class GoldResult(gold: DataFrame, goldPath: String,
                         qualityFailures: Seq[String])
@@ -53,8 +58,10 @@ object Runner {
                          cause: Option[Throwable] = None)
 
   /** Managed-run outcome: stage reports in execution order; `result` is
-    * the committed gold on success; `abortedAt` names the stage that
-    * exhausted retries or the gold gate that vetoed the publish.
+    * the committed gold on success; `qualityFailures` is the gate's
+    * verdict on the gold candidate (the veto reasons when the gate
+    * aborted the publish); `abortedAt` names the stage that exhausted
+    * retries or the gold gate that vetoed the publish.
     */
   case class ManagedResult(stages: Seq[StageReport],
                            result: Option[GoldResult],
@@ -94,15 +101,13 @@ object Runner {
       err), out)
   }
 
-  /** The dbt schema tests (models/gold/schema.yml:4-20), applied to a
-    * gold table or candidate.
+  /** The dbt schema tests (models/gold/schema.yml:4-20) on the gold
+    * candidate — not_null + unique on the bucket, not_null on both
+    * measures — as one Spark action.
     */
-  private def goldGate(gold: DataFrame): Seq[String] = Seq(
-    Checks.notNull(gold, "minute_bucket_us"),
-    Checks.unique(gold, "minute_bucket_us"),
-    Checks.notNull(gold, "gmv"),
-    Checks.notNull(gold, "paid_orders"))
-    .collect { case Left(e) => e }
+  private def goldGate(gold: DataFrame): Seq[String] =
+    Checks.keyedNotNull(gold, "minute_bucket_us", Seq("gmv", "paid_orders"))
+      .collect { case Left(e) => e }
 
   def run(spark: SparkSession, events: DataFrame, baseDir: String): GoldResult = {
     val m = runManaged(spark, events, baseDir, retries = 0, gateAborts = false)
@@ -122,7 +127,8 @@ object Runner {
     * `slaMs` is the per-stage SLA (breaches are surfaced in the reports,
     * never aborting); `gateAborts = true` (default) makes the quality
     * gate veto the gold publish — the managed semantics — while `false`
-    * reproduces [[run]]'s report-only posture (test-after-build).
+    * is [[run]]'s report-only posture: the same single audit of the
+    * candidate is reported and the candidate is published regardless.
     */
   def runManaged(spark: SparkSession, events: DataFrame, baseDir: String,
                  retries: Int = 2, backoffMs: Long = 500L,
@@ -155,28 +161,29 @@ object Runner {
       return ManagedResult(reports.toSeq, None, Nil, Some("silver"))
 
     // gold: the quality gate audits the merged candidate BEFORE the
-    // swap — an aborted publish leaves the gold table unmodified.
+    // swap, once — an aborted publish leaves the gold table unmodified,
+    // and a report-only publish writes exactly the rows it audited.
     val goldPath = s"$baseDir/gold/fct_sales_minute"
     val gateResult = stage("gold") {
       val fct = Medallion.salesMinute(spark.read.parquet(silverPath))
+      var failures = Seq.empty[String]
       Upsert.mergeIntoPathGated(spark, goldPath, fct,
         keys = Seq("minute_bucket_us"), ordering = Seq("minute_bucket_us")) {
-        candidate => if (gateAborts) goldGate(candidate) else Nil
+        candidate =>
+          failures = goldGate(candidate)
+          if (gateAborts) failures else Nil
       }
+      failures
     }
     gateResult match {
       case None =>
         ManagedResult(reports.toSeq, None, Nil, Some("gold"))
-      case Some(failures) if failures.nonEmpty =>
+      case Some(failures) if gateAborts && failures.nonEmpty =>
         ManagedResult(reports.toSeq, None, failures, Some("gold"))
-      case Some(_) =>
-        val gold = spark.read.parquet(goldPath)
-        // report-only posture re-audits the committed table (run()'s
-        // historical contract); managed runs re-audit for the record —
-        // a committed table that passed as a candidate passes again.
-        val failures = goldGate(gold)
+      case Some(failures) =>
         ManagedResult(reports.toSeq,
-          Some(GoldResult(gold, goldPath, failures)), failures, None)
+          Some(GoldResult(spark.read.parquet(goldPath), goldPath, failures)),
+          failures, None)
     }
   }
 }

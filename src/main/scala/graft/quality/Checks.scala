@@ -16,14 +16,15 @@ object Checks {
 
   private val CountCap = 1000000L
 
-  private def violation(df: DataFrame, what: String): Either[String, Unit] = {
+  private def violation(df: DataFrame, what: String): Either[String, Unit] =
     // limit() bounds the scan: a check's verdict needs "zero or not", not
     // an exact count of a billion violations. Report the cap honestly.
-    val n = df.limit(CountCap.toInt).count()
+    verdict(df.limit(CountCap.toInt).count(), what)
+
+  private def verdict(n: Long, what: String): Either[String, Unit] =
     if (n == 0) Right(())
     else if (n >= CountCap) Left(s"$what: >= $CountCap violating row(s) (count capped)")
     else Left(s"$what: $n violating row(s)")
-  }
 
   /** dbt `not_null`. */
   def notNull(df: DataFrame, column: String): Either[String, Unit] =
@@ -35,6 +36,30 @@ object Checks {
       df.groupBy(columns.map(col): _*).agg(count(lit(1)).as("n"))
         .filter(col("n") > 1),
       s"unique(${columns.mkString(",")})")
+
+  /** A keyed table's schema tests in ONE aggregation, so one Spark action
+    * instead of one per check: `not_null(key)`, `unique(key)`, then
+    * `not_null(c)` for each of `notNullCols`, in that order. Each verdict
+    * is exactly what [[notNull]] / [[unique]] return on their own — the
+    * NULL key is one group (two NULL keys are a duplicate), and counts at
+    * the cap read as capped. Groups by the key, then folds the per-group
+    * row and null counts into one row.
+    */
+  def keyedNotNull(df: DataFrame, key: String,
+                   notNullCols: Seq[String]): Seq[Either[String, Unit]] = {
+    val perKey = df.groupBy(col(key)).agg(count(lit(1)).as("__n"),
+      notNullCols.zipWithIndex.map { case (c, i) =>
+        sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"__nulls_$i")
+      }: _*)
+    val folds: Seq[Column] =
+      Seq(sum(when(col(key).isNull, col("__n"))), count(when(col("__n") > 1, 1))) ++
+        notNullCols.indices.map(i => sum(col(s"__nulls_$i")))
+    val r = perKey.agg(folds.head, folds.tail: _*).head()
+    // a SUM with nothing to add (no rows, no NULL key) is NULL: zero
+    def n(i: Int): Long = if (r.isNullAt(i)) 0L else r.getLong(i)
+    Seq(verdict(n(0), s"not_null($key)"), verdict(n(1), s"unique($key)")) ++
+      notNullCols.indices.map(i => verdict(n(i + 2), s"not_null(${notNullCols(i)})"))
+  }
 
   /** dbt `accepted_values`: NULLs pass (matching dbt's `NOT IN` compile —
     * null handling is [[notNull]]'s job).

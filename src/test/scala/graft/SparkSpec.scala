@@ -1,7 +1,10 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import scala.jdk.CollectionConverters._
 
 /** Shared local session for all suites (one JVM-wide session, tests fork). */
 object SparkSpec {
@@ -21,4 +24,37 @@ object SparkSpec {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.spark
   val sfDir: String = SparkSpec.sfDir
+
+  /** Flush the listener bus so every posted job start has reached the
+    * listeners (bytecode-public `listenerBus.waitUntilEmpty`, Scala
+    * private[spark] — reflection, the SerializableConfiguration trick).
+    */
+  private def flushListeners(): Unit = {
+    val sc = spark.sparkContext
+    val bus = sc.getClass.getMethods.find(_.getName == "listenerBus")
+      .get.invoke(sc)
+    bus.getClass.getMethods
+      .find(m => m.getName == "waitUntilEmpty" && m.getParameterCount == 0)
+      .map(_.invoke(bus))
+      .getOrElse {
+        val m = bus.getClass.getMethods
+          .find(m => m.getName == "waitUntilEmpty" && m.getParameterCount == 1)
+          .get
+        m.invoke(bus, java.lang.Long.valueOf(30000L))
+      }
+  }
+
+  /** Runs `body`, returning its value and every job start it caused. */
+  protected def withJobStarts[A](body: => A): (A, Seq[SparkListenerJobStart]) = {
+    val starts = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerJobStart]
+    val l = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = starts.add(js)
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val out = body
+      flushListeners()
+      (out, starts.asScala.toSeq)
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
 }

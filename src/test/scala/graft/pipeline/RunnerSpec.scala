@@ -9,6 +9,19 @@ import java.nio.file.Files
   */
 class RunnerSpec extends SparkSpec {
 
+  /** One purchase event; a `None` value makes its minute's gmv null. */
+  private def ev(id: Long, v: Option[Double], ts: String) = {
+    val t = java.sql.Timestamp.valueOf(ts)
+    (id, id % 3, "purchase", v, t, t.getTime * 1000L, new java.sql.Date(t.getTime))
+  }
+
+  private def batch(rows: (Long, Long, String, Option[Double], java.sql.Timestamp,
+      Long, java.sql.Date)*): org.apache.spark.sql.DataFrame = {
+    import spark.implicits._
+    rows.toDF("event_id", "user_id", "event_type", "value", "event_ts",
+      "event_ts_us", "event_date")
+  }
+
   test("bronze→silver→gold equals the direct gold query; rerun is idempotent") {
     val dir = Files.createTempDirectory("graft-runner").toString
     val events = Tables.events(spark, sfDir)
@@ -80,22 +93,15 @@ class RunnerSpec extends SparkSpec {
   }
 
   test("quality-gate abort vetoes the gold publish and leaves the table unmodified") {
-    import spark.implicits._
     val dir = Files.createTempDirectory("graft-runner4").toString
-    def ev(id: Long, v: Option[Double], ts: String) = {
-      val t = java.sql.Timestamp.valueOf(ts)
-      (id, id % 3, "purchase", v, t, t.getTime * 1000L, new java.sql.Date(t.getTime))
-    }
-    val good = Seq(ev(1, Some(10.0), "2024-01-01 01:00:00"))
-      .toDF("event_id", "user_id", "event_type", "value", "event_ts", "event_ts_us", "event_date")
+    val good = batch(ev(1, Some(10.0), "2024-01-01 01:00:00"))
     val m1 = Runner.runManaged(spark, good, dir)
     assert(m1.abortedAt.isEmpty && m1.qualityFailures.isEmpty)
     val goldBefore = spark.read.parquet(s"$dir/gold/fct_sales_minute")
       .collect().map(_.toString).sorted.toSeq
     // a null-value purchase in a FRESH minute makes the candidate's gmv
     // null — the gate must reject it BEFORE the swap
-    val bad = Seq(ev(2, None, "2024-01-01 02:00:00"))
-      .toDF("event_id", "user_id", "event_type", "value", "event_ts", "event_ts_us", "event_date")
+    val bad = batch(ev(2, None, "2024-01-01 02:00:00"))
     val m2 = Runner.runManaged(spark, bad, dir)
     assert(m2.abortedAt.contains("gold"))
     assert(m2.qualityFailures.exists(_.contains("gmv")), m2.qualityFailures.toString)
@@ -105,5 +111,32 @@ class RunnerSpec extends SparkSpec {
     assert(goldAfter == goldBefore, "aborted publish must leave gold untouched")
     // upstream layers keep their idempotent commits (Airflow task semantics)
     assert(spark.read.parquet(s"$dir/bronze/events_raw").count() == 2)
+  }
+
+  test("report-only run publishes a gate-failing batch and returns the gate's failures") {
+    val dir = Files.createTempDirectory("graft-runner5").toString
+    val r1 = Runner.run(spark, batch(ev(1, Some(10.0), "2024-01-01 01:00:00")), dir)
+    assert(r1.qualityFailures.isEmpty, r1.qualityFailures.mkString("; "))
+    // the abort test's bad batch: a null-value purchase in a fresh minute
+    val r2 = Runner.run(spark, batch(ev(2, None, "2024-01-01 02:00:00")), dir)
+    assert(r2.qualityFailures == Seq("not_null(gmv): 1 violating row(s)"))
+    val gold = r2.gold.collect()
+      .map(r => r.getLong(0) -> Option(r.get(1))).toMap
+    val bucket = (ts: String) => java.sql.Timestamp.valueOf(ts).getTime * 1000L
+    assert(gold == Map(bucket("2024-01-01 01:00:00") -> Some(10.0),
+      bucket("2024-01-01 02:00:00") -> None), gold.toString)
+  }
+
+  test("a managed batch on an existing lake runs at most 4 SQL executions " +
+    "(bronze write, silver write, gold audit, gold write)") {
+    val dir = Files.createTempDirectory("graft-runner6").toString
+    assert(Runner.runManaged(spark,
+      batch(ev(1, Some(10.0), "2024-01-01 01:00:00")), dir).abortedAt.isEmpty)
+    val (m, starts) = withJobStarts(Runner.runManaged(spark,
+      batch(ev(2, Some(20.0), "2024-01-01 01:01:00")), dir))
+    val ids = starts.flatMap(js => Option(js.properties)
+      .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))).distinct
+    assert(m.abortedAt.isEmpty && m.qualityFailures.isEmpty, m.toString)
+    assert(ids.size <= 4, s"one batch ran ${ids.size} SQL executions")
   }
 }

@@ -3,6 +3,7 @@ package graft.quality
 import graft.SparkSpec
 import graft.pipeline.Medallion
 import graft.sources.Tables
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Quality combinators: each check passes on conforming data, fails with a
@@ -25,6 +26,46 @@ class ChecksSpec extends SparkSpec {
     assert(Checks.unique(df, "k").swap.exists(_.contains("1 violating")))
     assert(Checks.notNull(df, "v").swap.exists(_.contains("1 violating")))
     assert(Checks.unique(df, "k", "v").isRight)
+    // the one-pass form returns the same verdicts on the same frame
+    assert(Checks.keyedNotNull(df, "k", Seq("v")) ==
+      Seq(Checks.notNull(df, "k"), Checks.unique(df, "k"), Checks.notNull(df, "v")))
+  }
+
+  test("keyedNotNull returns exactly what separate notNull/unique calls return") {
+    val k = "minute_bucket_us"
+    def separate(df: DataFrame) = Seq(Checks.notNull(df, k), Checks.unique(df, k),
+      Checks.notNull(df, "gmv"), Checks.notNull(df, "paid_orders"))
+    val frames = Seq(
+      "clean" -> Seq((Some(1L), Some(1.0), Some(1L)), (Some(2L), Some(2.0), Some(3L))),
+      "null key" -> Seq((None, Some(1.0), Some(1L)), (Some(2L), Some(2.0), Some(3L))),
+      "two null keys" -> Seq((None, Some(1.0), Some(1L)), (None, Some(2.0), Some(1L)),
+        (Some(3L), Some(3.0), Some(1L))),
+      "duplicated key" -> Seq((Some(1L), Some(1.0), Some(1L)), (Some(1L), Some(2.0), Some(1L)),
+        (Some(1L), Some(3.0), Some(1L)), (Some(2L), Some(4.0), Some(1L)),
+        (Some(2L), Some(5.0), Some(1L)), (Some(3L), Some(6.0), Some(1L))),
+      "null measure" -> Seq((Some(1L), None, Some(1L)), (Some(2L), None, None),
+        (Some(3L), Some(3.0), Some(1L))),
+      "empty" -> Seq.empty[(Option[Long], Option[Double], Option[Long])])
+    val got = frames.map { case (name, rows) =>
+      val df = rows.toDF(k, "gmv", "paid_orders")
+      val one = Checks.keyedNotNull(df, k, Seq("gmv", "paid_orders"))
+      assert(one == separate(df), name)
+      name -> one.collect { case Left(e) => e }
+    }.toMap
+    assert(got("clean").isEmpty && got("empty").isEmpty)
+    assert(got("null key") == Seq(s"not_null($k): 1 violating row(s)"))
+    assert(got("two null keys") == Seq(s"not_null($k): 2 violating row(s)",
+      s"unique($k): 1 violating row(s)"))
+    assert(got("duplicated key") == Seq(s"unique($k): 2 violating row(s)"))
+    assert(got("null measure") == Seq("not_null(gmv): 2 violating row(s)",
+      "not_null(paid_orders): 1 violating row(s)"))
+    // a count at the cap reads as capped, as it does in the separate checks
+    val capped = spark.range(1000000L)
+      .select((col("id") % 4).as(k), lit(null).cast("double").as("gmv"),
+        lit(1L).as("paid_orders"))
+    val one = Checks.keyedNotNull(capped, k, Seq("gmv", "paid_orders"))
+    assert(one == separate(capped))
+    assert(one(2) == Left("not_null(gmv): >= 1000000 violating row(s) (count capped)"))
   }
 
   test("acceptedValues / notEmptyString") {
